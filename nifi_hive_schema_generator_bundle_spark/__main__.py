@@ -67,21 +67,25 @@ def cmd_infer(args) -> int:
 def cmd_route(args) -> int:
     from pyspark.sql import functions as F
 
-    from .operators.routing import is_valid_json, split_valid
+    from .operators.routing import is_valid_json, observe_count, split_valid
 
     spark = _session(args)
     lines = spark.read.text(args.input)
     if args.quarantine:
-        lines = lines.cache()
-        _, bad = split_valid(lines, "value")
+        # one pass: the quarantine write carries both counts as observed
+        # metrics, so the lines are neither cached nor scanned twice
+        lines, rows = observe_count(lines)
+        bad, bad_rows = observe_count(split_valid(lines, "value").failure)
         bad.write.mode("overwrite").text(args.quarantine)
-    valid = is_valid_json("value").cast("long")
-    counts = lines.agg(
-        F.sum(valid).alias("v"), F.sum(F.lit(1) - valid).alias("i")
-    ).collect()[0]
-    if args.quarantine:
-        lines.unpersist()
-    print(f"valid={counts['v'] or 0} invalid={counts['i'] or 0}")
+        invalid = bad_rows.get["n"]
+        valid = rows.get["n"] - invalid
+    else:
+        flag = is_valid_json("value").cast("long")
+        counts = lines.agg(
+            F.sum(flag).alias("v"), F.sum(F.lit(1) - flag).alias("i")
+        ).collect()[0]
+        valid, invalid = counts["v"] or 0, counts["i"] or 0
+    print(f"valid={valid} invalid={invalid}")
     return 0
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, StructType
 
 from .operators.infer import infer_schema_df, infer_schema_native
 from .plans.render import render_hive_ddl, render_spark_ddl
@@ -82,25 +82,42 @@ def infer_and_register(
     location: str | None = None,
 ) -> dict:
     """Full pipeline (SURVEY §3 'Spark lifecycle'): scan → route → infer →
-    render → register. Returns counts plus both DDL dialects."""
-    from .operators.routing import split_valid
+    render → register. Returns counts plus both DDL dialects.
 
-    lines = spark.read.text(path)
-    good, bad = split_valid(lines, "value")
-    good = good.cache()
+    One Spark job: scan → CollectMetrics(rows) → filter(validity) →
+    CollectMetrics(good) → mapInPandas partial folds → collect. The
+    inference collect is the only action; both counts are observed
+    metrics of that same pass (``bad = rows - good``), so nothing is
+    cached and no line is parsed twice. An input with fewer splits than
+    the default parallelism adds the round-robin repartition of
+    ``ensure_min_partitions``, whose shuffle map stage adaptive execution
+    runs as a job of its own.
+
+    An input without a single column (empty, all-corrupt, only ``{}``)
+    registers nothing and returns ``spark_ddl=None`` — the null-input
+    guard (SURVEY §2 O16); ``hive_ddl`` is still the reference's
+    no-column rendering.
+    """
+    from .operators.routing import observe_count, split_valid
+
+    lines, rows = observe_count(spark.read.text(path))
+    good, good_rows = observe_count(split_valid(lines, "value").success)
     schema = infer_schema_df(good, "value")
+    good_count = good_rows.get["n"]
     loc = location or path
     hive_ddl = render_hive_ddl(schema, table, loc)
-    spark_ddl = register_table(spark, schema, table, loc)
-    result = {
+    spark_ddl = (
+        None
+        if schema == StructType([])
+        else register_table(spark, schema, table, loc)
+    )
+    return {
         "table": table,
-        "good_count": good.count(),
-        "bad_count": bad.count(),
+        "good_count": good_count,
+        "bad_count": rows.get["n"] - good_count,
         "hive_ddl": hive_ddl,
         "spark_ddl": spark_ddl,
     }
-    good.unpersist()
-    return result
 
 
 def ddl_per_group(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -27,6 +27,7 @@ __all__ = [
     "is_valid_json_lax",
     "split_valid",
     "split_valid_whole_content",
+    "observe_count",
     "RoutedFrames",
 ]
 
@@ -98,3 +99,14 @@ def split_valid(df: DataFrame, column: str = "value") -> RoutedFrames:
     """
     pred = is_valid_json(column)
     return RoutedFrames(success=df.filter(pred), failure=df.filter(~pred))
+
+
+def observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count attached as an observed metric, plus the
+    ``Observation`` holding it: ``obs.get["n"]`` is the number of rows the
+    first action over the returned frame saw (it blocks until that action
+    finished). Counting rides along in the action's own stage, so routed
+    counts need no cache and no second scan. Unnamed observations get a
+    UUID name, so concurrent callers in one session cannot collide."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
 
 from ..operators.infer import infer_schema_df
-from ..operators.routing import split_valid
+from ..operators.routing import observe_count, split_valid
 from ..plans.lattice import merge_types, type_to_dict
 from ..plans.render import render_alter_ddl, render_hive_ddl
 
@@ -49,49 +49,51 @@ class InferenceState:
     quarantine_path: str | None = None
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """One micro-batch in one inference pass: the batch's row count and
+        its valid-row count are observed metrics of the inference collect,
+        so nothing is cached. ``bad`` is re-read only when the batch has
+        bad lines and a quarantine path is set.
+
+        The quarantine write runs after inference: if inference raises,
+        this batch's bad lines are not written before the batch is
+        retried."""
         self.batches += 1
-        good, bad = split_valid(batch_df, "value")
-        good = good.cache()
-        try:
-            if self.quarantine_path is not None:
-                bad_count = bad.cache().count()
-                if bad_count:
-                    bad.write.mode("append").text(self.quarantine_path)
-                self.bad_rows += bad_count
-                bad.unpersist()
-            else:
-                self.bad_rows += bad.count()
-            n_good = good.count()
-            self.good_rows += n_good
-            if n_good == 0:
-                return  # null-input guard (SURVEY §2 O16)
-            batch_schema = infer_schema_df(good, "value")
-            before = type_to_dict(self.schema)
-            merged = merge_types(self.schema, batch_schema)
-            if type_to_dict(merged) != before:
-                old = self.schema
-                # drift from the empty initial schema IS the table creation
-                # — an ALTER restating the CREATE's columns would be
-                # redundant (and invalid: the table doesn't exist yet). A
-                # resumed state pre-seeded with a prior schema still emits
-                # ALTERs, so the empty-schema test is the right signal,
-                # not ddl_history emptiness.
-                is_creation = isinstance(old, StructType) and not old.fields
-                self.schema = merged
-                ddl = render_hive_ddl(
-                    merged, self.table, self.location, drop_if_exists=True
+        observed, rows = observe_count(batch_df)
+        good, bad = split_valid(observed, "value")
+        good, good_rows = observe_count(good)
+        batch_schema = infer_schema_df(good, "value")
+        n_good = good_rows.get["n"]
+        bad_count = rows.get["n"] - n_good
+        if self.quarantine_path is not None and bad_count:
+            bad.write.mode("append").text(self.quarantine_path)
+        self.bad_rows += bad_count
+        self.good_rows += n_good
+        if n_good == 0:
+            return  # null-input guard (SURVEY §2 O16)
+        before = type_to_dict(self.schema)
+        merged = merge_types(self.schema, batch_schema)
+        if type_to_dict(merged) != before:
+            old = self.schema
+            # drift from the empty initial schema IS the table creation
+            # — an ALTER restating the CREATE's columns would be
+            # redundant (and invalid: the table doesn't exist yet). A
+            # resumed state pre-seeded with a prior schema still emits
+            # ALTERs, so the empty-schema test is the right signal,
+            # not ddl_history emptiness.
+            is_creation = isinstance(old, StructType) and not old.fields
+            self.schema = merged
+            ddl = render_hive_ddl(
+                merged, self.table, self.location, drop_if_exists=True
+            )
+            self.ddl_history.append(ddl)
+            # incremental path: evolve the live table in place instead
+            # of re-creating it (SURVEY §7 step 5 - ALTER on drift)
+            if not is_creation:
+                self.alter_history.extend(
+                    render_alter_ddl(old, merged, self.table)
                 )
-                self.ddl_history.append(ddl)
-                # incremental path: evolve the live table in place instead
-                # of re-creating it (SURVEY §7 step 5 - ALTER on drift)
-                if not is_creation:
-                    self.alter_history.extend(
-                        render_alter_ddl(old, merged, self.table)
-                    )
-                if self.on_drift is not None:
-                    self.on_drift(ddl, merged)
-        finally:
-            good.unpersist()
+            if self.on_drift is not None:
+                self.on_drift(ddl, merged)
 
     @property
     def current_ddl(self) -> str | None:

@@ -4,19 +4,23 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql.types import ArrayType, StringType, StructType
 
+from nifi_hive_schema_generator_bundle_spark import catalog
 from nifi_hive_schema_generator_bundle_spark.catalog import infer_and_register, infer_ddl
 from nifi_hive_schema_generator_bundle_spark.operators.infer import (
     infer_schema_df,
     infer_schema_exact,
     infer_schema_native,
 )
+from nifi_hive_schema_generator_bundle_spark.operators.routing import split_valid
 from nifi_hive_schema_generator_bundle_spark.plans.lattice import (
     finalize_type,
     schema_from_json_lines,
+    type_to_dict,
 )
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "provenance.ndjson")
@@ -93,6 +97,95 @@ def test_infer_and_register_executes(spark, tmp_path):
     cols = spark.table("prov_reg").columns
     assert "eventOrdinal" in cols
     spark.sql("DROP TABLE prov_reg")
+
+
+# good and bad lines for routing: two truncated objects, a bare scalar
+# (org.json rejects it as an object or array) and a blank line are bad
+MIXED_LINES = [
+    '{"a": 1, "b": {"c": "x"}}',
+    '{"a": 2, "b": {"c": "y"',
+    '{"a":',
+    "5",
+    "",
+    '{"a": 4, "d": [1, 2]}',
+]
+
+
+@pytest.mark.parametrize("with_array", [False, True], ids=["objects", "top_level_array"])
+def test_infer_and_register_counts_match_routing(spark, tmp_path, monkeypatch, with_array):
+    """Both counts are observed metrics of the inference pass; they must
+    equal split_valid's own filter counts, and the schema must be the
+    fold over exactly the lines routing let through."""
+    lines = MIXED_LINES + (['[{"a": 3}]'] if with_array else [])
+    p = tmp_path / "mixed.ndjson"
+    p.write_text("\n".join(lines) + "\n")
+    good, bad = split_valid(spark.read.text(str(p)), "value")
+    good_lines = [r["value"] for r in good.collect()]
+    schemas = []
+
+    def capture(df, column="value"):
+        schemas.append(infer_schema_df(df, column))
+        return schemas[-1]
+
+    monkeypatch.setattr(catalog, "infer_schema_df", capture)
+    if with_array:
+        # a top-level array joins the objects to STRING, which names no
+        # table (render_spark_ddl rejects it); the counts are under test
+        monkeypatch.setattr(catalog, "register_table", lambda *a, **k: None)
+    res = infer_and_register(spark, str(p), "mixed_reg", str(tmp_path / "loc"))
+    assert (res["good_count"], res["bad_count"]) == (len(good_lines), bad.count())
+    assert (res["good_count"], res["bad_count"]) == (2 + with_array, 4)
+    assert type_to_dict(schemas[0]) == type_to_dict(schema_from_json_lines(good_lines))
+    if not with_array:
+        assert set(spark.table("mixed_reg").columns) == {"a", "b", "d"}
+        spark.sql("DROP TABLE mixed_reg")
+
+
+def test_infer_and_register_is_one_job_without_cache(spark, tmp_path, monkeypatch):
+    """Routing, both counts and the fold run as the inference collect:
+    one job, and nothing enters Spark's cache on the way."""
+    sc = spark.sparkContext
+    src = tmp_path / "split"
+    src.mkdir()
+    # one file per core: the scan is split enough that
+    # ensure_min_partitions adds no repartition stage
+    for i in range(sc.defaultParallelism):
+        (src / f"part{i}.json").write_text('{"a": %d}\n{"a":\n' % i)
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    cache_mgr.clearCache()
+    cached_at_inference = []
+
+    def probe(df, column="value"):
+        cached_at_inference.append(not cache_mgr.isEmpty())
+        return infer_schema_df(df, column)
+
+    monkeypatch.setattr(catalog, "infer_schema_df", probe)
+    group = f"one-job-{uuid.uuid4()}"
+    sc.setJobGroup(group, "infer_and_register")
+    try:
+        res = infer_and_register(spark, str(src), "one_job", str(tmp_path / "loc"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert cached_at_inference == [False]
+    assert cache_mgr.isEmpty()
+    n = sc.defaultParallelism
+    assert (res["good_count"], res["bad_count"]) == (n, n)
+    spark.sql("DROP TABLE one_job")
+
+
+def test_infer_and_register_empty_file_returns_zero_counts(spark, tmp_path):
+    """The observed counts must resolve even when the scan has no rows
+    (Observation.get blocks until the action reports its metrics), and
+    a no-column schema registers nothing."""
+    p = tmp_path / "empty.ndjson"
+    p.write_text("")
+    res = infer_and_register(spark, str(p), "empty_reg", str(tmp_path / "loc"))
+    assert (res["good_count"], res["bad_count"]) == (0, 0)
+    assert res["spark_ddl"] is None
+    assert "empty_reg" not in [t.name for t in spark.catalog.listTables()]
 
 
 def test_top_level_array_file_yields_error_definition(spark, tmp_path):

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nifi_hive_schema_generator_bundle_spark.streaming.infer_stream import (
+    InferenceState,
     run_inference_stream,
 )
 from nifi_hive_schema_generator_bundle_spark.streaming.windows import (
@@ -68,6 +69,30 @@ def test_inference_stream_drift(spark, tmp_path):
         if not f.startswith(("_", ".")):
             bad_lines += (tmp_path / "bad" / f).read_text().splitlines()
     assert bad_lines == ["not json"]
+
+
+def test_process_batch_quarantines_only_batches_with_bad_lines(spark, tmp_path):
+    """Counts are observed metrics of the batch's inference pass; the
+    quarantine write runs only for a batch that has bad lines, and an
+    empty batch resolves its counts without blocking."""
+    quarantine = tmp_path / "bad"
+    state = InferenceState("qb", "/warehouse/qb", quarantine_path=str(quarantine))
+
+    def batch(lines):
+        return spark.createDataFrame([(line,) for line in lines], "value string")
+
+    def parts():
+        return sorted(quarantine.glob("part-*"))
+
+    state.process_batch(batch(['{"a": 1}', '{"a": 2}']), 0)
+    assert parts() == []
+    state.process_batch(batch(['{"a": 3, "b": "x"}', '{"b":', "7"]), 1)
+    quarantined = [line for p in parts() for line in p.read_text().splitlines()]
+    assert sorted(quarantined) == ['7', '{"b":']
+    state.process_batch(batch([]), 2)
+    assert (state.batches, state.good_rows, state.bad_rows) == (3, 3, 2)
+    assert len(state.ddl_history) == 2
+    assert "`b` STRING" in state.current_ddl
 
 
 def test_windowed_counts_batch_equivalence(spark, sf_smoke_dir):
